@@ -21,9 +21,7 @@ import sys
 from typing import Optional, Sequence
 
 from .config import load_config
-from .pipeline import run_etl_pipeline
-from .plans.validator import validate
-from .sources.readers import read_source_csv
+from .pipeline import PipelineReport, ValidationFailFast, run_etl_pipeline
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -66,42 +64,23 @@ def main(argv: Optional[Sequence[str]] = None) -> int:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("WARN")
-    cfg = load_config(args.config)
-
-    if args.dry_run:
-        df = read_source_csv(spark, path, cfg)
-        res = validate(df, cfg)
-        annotated = res.annotated.persist()
-        try:
-            from pyspark.sql import functions as F
-
-            counts = annotated.agg(
-                F.count(F.lit(1)).alias("total"),
-                F.sum(F.when(F.size("errors") == 0, 1).otherwise(0)).alias("valid"),
-            ).collect()[0]
-            total, valid = counts["total"] or 0, counts["valid"] or 0
-            print(f"[DRY RUN] total={total} valid={valid} invalid={total - valid}")
-            preview = res.errors.limit(5).collect()
-            for r in preview:
-                print(f"  error: {r['field_name']} {r['error_type']}: {r['error_message']}")
-        finally:
-            annotated.unpersist()
+    try:
+        report = run_etl_pipeline(
+            spark,
+            path,
+            load_config(args.config),
+            output_dir=None if args.dry_run else args.output_dir,
+            archive=False if args.dry_run else (bool(args.archive_dir) or None),
+            archive_dir=args.archive_dir,
+        )
+    except ValidationFailFast as exc:
+        print(_counts_line(exc.report, args.dry_run))
+        print(exc, file=sys.stderr)
+        return 1
+    finally:
         spark.stop()
-        return 0
 
-    report = run_etl_pipeline(
-        spark,
-        path,
-        cfg,
-        output_dir=args.output_dir,
-        archive=bool(args.archive_dir) or None,
-        archive_dir=args.archive_dir,
-    )
-    print(
-        f"total={report.total_records} valid={report.valid_records} "
-        f"invalid={report.invalid_records} ({report.valid_pct:.1f}% valid) "
-        f"inserted={report.rows_inserted} errors_logged={report.errors_logged}"
-    )
+    print(_counts_line(report, args.dry_run))
     for fc in report.file_counts:
         status = "OK " if fc["invalid"] == 0 else "ERR"
         print(f"  {status} {fc['file']}: total={fc['total']} valid={fc['valid']} invalid={fc['invalid']}")
@@ -114,8 +93,17 @@ def main(argv: Optional[Sequence[str]] = None) -> int:
         print(f"  error: {r['field_name']} {r['error_type']}: {r['error_message']}")
     if report.archived:
         print(f"archived {len(report.archived)} file(s)")
-    spark.stop()
     return 0
+
+
+def _counts_line(report: PipelineReport, dry_run: bool) -> str:
+    counts = f"total={report.total_records} valid={report.valid_records} invalid={report.invalid_records}"
+    if dry_run:
+        return f"[DRY RUN] {counts}"
+    return (
+        f"{counts} ({report.valid_pct:.1f}% valid) "
+        f"inserted={report.rows_inserted} errors_logged={report.errors_logged}"
+    )
 
 
 if __name__ == "__main__":

@@ -10,7 +10,10 @@ the glob-batch driver (``src/main.py:34-55``). Differences by design:
   INSERTs with manual commit batching;
 * error policy: ``continue`` (reference default) marks a failed file's rows
   and keeps going — at-least-once per file, like the reference's
-  try/except-per-file loop (``src/main.py:26-31``).
+  try/except-per-file loop (``src/main.py:26-31``);
+* the per-frame pass (``_process``) is shared with each file-stream
+  micro-batch and the CLI dry run, so all three count, gate and archive
+  alike.
 """
 
 from __future__ import annotations
@@ -21,6 +24,7 @@ from typing import Any, Mapping, Optional
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .config import IntegrationConfig, load_config, spark_type_for
+from .plans.rules import ERRORS
 from .plans.validator import ValidationResult, validate
 from .sources.archive import archive_file
 from .sources.readers import FILE_SOURCE_COL, read_source_csv
@@ -116,9 +120,34 @@ def run_etl_pipeline(
     """End-to-end run over one file or a glob. ``output_dir`` receives
     ``quality_data/`` and ``validation_errors/`` for file-format sinks."""
     cfg = load_config(config) if isinstance(config, str) else config
-    report = PipelineReport()
+    do_archive = cfg.etl.archive_processed_files if archive is None else archive
+    return _process(
+        spark, read_source_csv(spark, input_path, cfg), cfg,
+        output_dir=output_dir, sink_format=sink_format, jdbc=jdbc,
+        lookup_values=lookup_values, dim_tables=dim_tables, extensions=extensions,
+        archive_dir=archive_dir if do_archive else None,
+    )
 
-    df = read_source_csv(spark, input_path, cfg)
+
+def _process(
+    spark: SparkSession,
+    df: DataFrame,
+    cfg: IntegrationConfig,
+    *,
+    output_dir: Optional[str] = None,
+    sink_format: str = "parquet",
+    jdbc: bool = False,
+    lookup_values: Optional[Mapping[str, Any]] = None,
+    dim_tables: Optional[Mapping[str, DataFrame]] = None,
+    extensions: bool = False,
+    archive_dir: Optional[str] = None,
+) -> PipelineReport:
+    """The one per-frame pass behind the batch pipeline, each file-stream
+    micro-batch and the CLI dry run: validate -> per-file counts -> error
+    preview -> fail_fast gate -> sinks -> archive. ``df`` carries
+    ``FileSource`` lineage; no sink is written when neither ``jdbc`` nor
+    ``output_dir`` is given, and nothing is archived without ``archive_dir``."""
+    report = PipelineReport()
     result: ValidationResult = validate(
         df, cfg, lookup_values=lookup_values, dim_tables=dim_tables, extensions=extensions
     )
@@ -128,33 +157,25 @@ def run_etl_pipeline(
     # consumer (3 full scans of the source at 100 TB otherwise).
     annotated = result.annotated.persist()
     try:
-        # one pass for the counters (A3) instead of three count() jobs —
-        # this also materializes the cache the sinks reuse
-        counts = annotated.agg(
-            F.count(F.lit(1)).alias("total"),
-            F.sum(F.when(F.size("errors") == 0, 1).otherwise(0)).alias("valid"),
-        ).collect()[0]
-        report.total_records = counts["total"] or 0
-        report.valid_records = counts["valid"] or 0
+        # ONE job over the cache (and the one that fills it): per-file counts
+        # (A4) — the glob stays one distributed read, lineage recovers the
+        # per-file loop — with the report totals (A3) summed on the driver
+        per_file = (
+            annotated.groupBy(F.col(FILE_SOURCE_COL).alias("file"))
+            .agg(
+                F.count(F.lit(1)).alias("total"),
+                F.sum(F.when(F.size(ERRORS) == 0, 1).otherwise(0)).alias("valid"),
+                F.sum(F.size(ERRORS)).alias("errors"),
+            )
+            .collect()
+        )
+        report.file_counts = [
+            {"file": r["file"], "total": r["total"], "valid": r["valid"], "invalid": r["total"] - r["valid"]}
+            for r in per_file
+        ]
+        report.total_records = sum(r["total"] for r in per_file)
+        report.valid_records = sum(r["valid"] for r in per_file)
         report.invalid_records = report.total_records - report.valid_records
-
-        # per-file breakdown (A4): one agg over the cached frame — the glob
-        # stays ONE distributed read, lineage recovers the per-file loop
-        if FILE_SOURCE_COL in annotated.columns:
-            report.file_counts = [
-                {
-                    "file": r["file"],
-                    "total": r["total"],
-                    "valid": r["valid"],
-                    "invalid": r["total"] - r["valid"],
-                }
-                for r in annotated.groupBy(F.col(FILE_SOURCE_COL).alias("file"))
-                .agg(
-                    F.count(F.lit(1)).alias("total"),
-                    F.sum(F.when(F.size("errors") == 0, 1).otherwise(0)).alias("valid"),
-                )
-                .collect()
-            ]
 
         # first-5 error preview (O2) — tiny limit, rides the cache
         report.error_preview = [r.asDict() for r in result.errors.limit(5).collect()]
@@ -175,18 +196,16 @@ def run_etl_pipeline(
             )
         else:
             report.rows_inserted = report.valid_records
-            report.errors_logged = result.errors.count()
+            report.errors_logged = sum(r["errors"] for r in per_file)
     finally:
         annotated.unpersist()
 
-    do_archive = cfg.etl.archive_processed_files if archive is None else archive
-    if do_archive and archive_dir:
-        import glob as _glob
-
-        for f in sorted(_glob.glob(input_path)) or [input_path]:
-            dest = archive_file(spark, f, archive_dir, enabled=True)
-            if dest:
-                report.archived.append(dest)
+    if archive_dir:
+        # driver-side file-index metadata (no job); it lists header-only
+        # files too. A foreachBatch micro-batch has none, so fall back to
+        # the files that produced rows.
+        for path in sorted(df.inputFiles() or [f["file"] for f in report.file_counts]):
+            report.archived.append(archive_file(spark, path, archive_dir))
 
     return report
 

@@ -27,7 +27,7 @@ from typing import Iterable, Optional
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from .rules import error_struct
+from .rules import ERRORS, error_struct
 
 __all__ = [
     "append_errors",
@@ -36,8 +36,6 @@ __all__ = [
     "zscore_outlier_check",
     "referential_check",
 ]
-
-ERRORS = "errors"
 
 
 def append_errors(df: DataFrame, maybe_error: Column) -> DataFrame:

@@ -40,6 +40,7 @@ from pyspark.sql import Column, functions as F
 from pyspark.sql import types as T
 
 __all__ = [
+    "ERRORS",
     "ERROR_STRUCT_TYPE",
     "ERRORS_ARRAY_TYPE",
     "CompileContext",
@@ -59,6 +60,8 @@ ERROR_STRUCT_TYPE = T.StructType(
     ]
 )
 ERRORS_ARRAY_TYPE = T.ArrayType(ERROR_STRUCT_TYPE)
+# name of the per-row ``array<ERROR_STRUCT_TYPE>`` column the validator appends
+ERRORS = "errors"
 
 
 @dataclass

@@ -25,11 +25,9 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from ..config import FieldMapping, GlobalRule, IntegrationConfig
 from . import dataset_rules
-from .rules import CompileContext, compile_field_errors
+from .rules import ERRORS, CompileContext, compile_field_errors
 
 __all__ = ["ValidationResult", "annotate_errors", "validate", "with_row_index"]
-
-ERRORS = "errors"
 
 # The reference demos its lookup rule against a hardcoded product set
 # (``src/data_validator.py:197``); we register the same set as a literal

@@ -4,10 +4,13 @@ Reference: ``archive_file`` renames into ``data/processed/`` with a
 ``{YYYYmmdd_HHMMSS}_{name}`` prefix, gated by the
 ``ArchiveProcessedFiles`` flag (``src/etl_processor.py:160-179``).
 
-Batch mode uses the Hadoop FS API through the active session (works for
-local paths and any configured DFS); streaming mode should prefer the file
-source's built-in ``cleanSource='archive'`` + ``sourceArchiveDir`` instead
-(see ``streaming.file_pipeline``).
+Uses the Hadoop FS API through the active session (works for local paths,
+``file:`` URIs and any configured DFS). Batch runs and file-stream
+micro-batches both archive through this function at the end of the shared
+per-frame step; the stream does NOT use the file source's
+``cleanSource='archive'``, whose cleaner only runs at the next trigger and
+so would strand an ``availableNow`` drain's last batch in the inbox (see
+``streaming.file_pipeline``).
 """
 
 from __future__ import annotations

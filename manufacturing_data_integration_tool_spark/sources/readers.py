@@ -54,6 +54,12 @@ def nanos_to_timestamp(col: Column | str) -> Column:
     return F.timestamp_micros(F.floor(c / F.lit(1000)).cast("long"))
 
 
+def source_schema(config: IntegrationConfig) -> T.StructType:
+    """The pinned all-string schema of the declared source columns, shared
+    by every config-driven reader (batch and stream)."""
+    return T.StructType([T.StructField(c, T.StringType(), True) for c in config.source_columns])
+
+
 def read_source_csv(
     spark: SparkSession,
     path_or_glob: str | Sequence[str],
@@ -75,8 +81,7 @@ def read_source_csv(
         .option("mode", "PERMISSIVE")
     )
     if config:
-        schema = T.StructType([T.StructField(c, T.StringType(), True) for c in config.source_columns])
-        reader = reader.schema(schema)
+        reader = reader.schema(source_schema(config))
     df = reader.csv(list(path_or_glob) if isinstance(path_or_glob, (list, tuple)) else path_or_glob)
     if with_lineage:
         df = df.withColumn(FILE_SOURCE_COL, F.input_file_name())
@@ -100,10 +105,7 @@ def read_source_jsonl(
     otherwise mirror the CSV source (PERMISSIVE, optional lineage)."""
     reader = spark.read.option("mode", "PERMISSIVE")
     if config:
-        schema = T.StructType(
-            [T.StructField(c, T.StringType(), True) for c in config.source_columns]
-        )
-        reader = reader.schema(schema)
+        reader = reader.schema(source_schema(config))
     df = reader.json(
         list(path_or_glob)
         if isinstance(path_or_glob, (list, tuple))
@@ -320,10 +322,7 @@ def read_source_xml(
     """
     reader = spark.read.format("xml").option("rowTag", row_tag)
     if config:
-        schema = T.StructType(
-            [T.StructField(c, T.StringType(), True) for c in config.source_columns]
-        )
-        reader = reader.schema(schema)
+        reader = reader.schema(source_schema(config))
     paths = (
         list(path_or_glob)
         if isinstance(path_or_glob, (list, tuple))

@@ -1,12 +1,11 @@
 """Structured Streaming front-end for the ETL pipeline.
 
 The reference's batch-of-files loop + archive-on-success
-(``src/main.py:34-55``, ``src/etl_processor.py:160-179``) is exactly the
-contract of a Structured Streaming **file source** with
-``cleanSource='archive'``: new files appear, each micro-batch runs
-validate -> project -> sinks via ``foreachBatch``, and consumed files are
-moved aside by the engine with exactly-once bookkeeping in the checkpoint —
-no hand-rolled success tracking.
+(``src/main.py:34-55``, ``src/etl_processor.py:160-179``) maps onto a
+Structured Streaming **file source**: new files appear, the checkpoint
+remembers which were consumed, and each micro-batch runs the batch
+pipeline's own per-frame step (validate -> counts -> fail_fast gate ->
+sinks -> archive) via ``foreachBatch`` — no hand-rolled success tracking.
 
 Event-time analytics (watermark + tumbling/session windows) are greenfield
 capability for the ``events`` stream (SURVEY.md §2.9): the reference has no
@@ -15,17 +14,14 @@ real-time surface.
 
 from __future__ import annotations
 
-from typing import Any, Callable, Mapping, Optional
+from typing import Any, Mapping, Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from ..config import IntegrationConfig
-from ..pipeline import project_to_target
-from ..plans.validator import validate
-from ..sources.archive import archive_file
-from ..sources.sinks import shape_errors_for_sink
+from ..pipeline import _process
+from ..sources.readers import FILE_SOURCE_COL, source_schema
 
 
 def ensure_event_time(df: DataFrame, ts_col: str = "ts") -> DataFrame:
@@ -58,20 +54,19 @@ def start_file_stream(
     watching the directory like a daemonized version of the reference CLI.
 
     ``max_files_per_trigger`` defaults to 128 so the per-batch archive step
-    (which collects the DISTINCT file list of the batch to the driver for
-    renames) is bounded by construction, not by assumption — a backlogged
+    (which collects the batch's per-file counts to the driver for renames)
+    is bounded by construction, not by assumption — a backlogged
     inbox drains over several batches instead of one unbounded batch.
     Pass ``None`` to remove the bound.
     """
-    schema = T.StructType([T.StructField(c, T.StringType(), True) for c in config.source_columns])
     reader = (
         spark.readStream.option("header", config.source.has_header)
         .option("sep", config.source.delimiter)
-        .schema(schema)
+        .schema(source_schema(config))
     )
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.csv(input_dir).withColumn("FileSource", F.input_file_name())
+    stream = reader.csv(input_dir).withColumn(FILE_SOURCE_COL, F.input_file_name())
 
     # NOTE we archive explicitly per micro-batch rather than via
     # ``cleanSource='archive'``: Spark's source cleaner only runs at the
@@ -80,26 +75,8 @@ def start_file_stream(
     # unboundedly). The checkpoint log already remembers processed files, so
     # moving them after the batch commits is safe.
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        result = validate(batch_df, config, lookup_values=lookup_values)
-        annotated = result.annotated.persist()
-        try:
-            project_to_target(result.valid, config).write.mode("append").parquet(
-                f"{output_dir}/quality_data"
-            )
-            shape_errors_for_sink(result.errors).write.mode("append").parquet(
-                f"{output_dir}/validation_errors"
-            )
-            if archive_dir:
-                files = [
-                    r[0]
-                    for r in annotated.select("FileSource").distinct().collect()
-                    if r[0]
-                ]
-                for uri in sorted(files):
-                    path = uri[len("file:"):] if uri.startswith("file:") else uri
-                    archive_file(spark, path, archive_dir, enabled=True)
-        finally:
-            annotated.unpersist()
+        _process(spark, batch_df, config, output_dir=output_dir,
+                 lookup_values=lookup_values, archive_dir=archive_dir)
 
     writer = stream.writeStream.foreachBatch(process_batch).option("checkpointLocation", checkpoint_dir)
     if available_now:

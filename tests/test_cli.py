@@ -6,6 +6,8 @@ import subprocess
 import sys
 from pathlib import Path
 
+import pytest
+
 REPO = Path(__file__).resolve().parents[1]
 
 
@@ -59,6 +61,21 @@ def test_cli_dry_run(golden_csv, mapping_config_path):
               "--master", "local[2]"])
     assert r.returncode == 0, r.stderr[-2000:]
     assert "[DRY RUN] total=9 valid=6 invalid=3" in r.stdout
+
+
+@pytest.mark.parametrize("dry_run", [False, True])
+def test_cli_fail_fast_exits_cleanly(golden_csv, mapping_config_path, tmp_path, dry_run):
+    cfg = tmp_path / "fail_fast.xml"
+    cfg.write_text(Path(mapping_config_path).read_text().replace(
+        "<ErrorHandling>continue</ErrorHandling>", "<ErrorHandling>fail_fast</ErrorHandling>"))
+    out = tmp_path / "out"
+    args = ["--input", golden_csv, "--config", str(cfg), "--output-dir", str(out), "--master", "local[2]"]
+    r = _run(args + ["--dry-run"] * dry_run)
+    assert r.returncode == 1, r.stderr[-2000:]
+    assert "total=9 valid=6 invalid=3" in r.stdout
+    assert "fail_fast: 3 of 9 rows invalid" in r.stderr
+    assert "Traceback" not in r.stderr
+    assert not out.exists()
 
 
 def test_cli_missing_file(mapping_config_path):

@@ -101,6 +101,30 @@ def test_fail_fast_aborts_before_sinks(spark, golden_csv, mapping_config_path, t
     assert not (out / "quality_data").exists()
 
 
+def test_archive_after_uri_glob_moves_every_matched_file(spark, golden_csv, mapping_config_path, tmp_path):
+    """A ``file://`` glob archives the files it matched — the header-only one
+    included — instead of trying to rename the pattern after the sinks land."""
+    inbox = tmp_path / "inbox"
+    inbox.mkdir()
+    shutil.copy(golden_csv, inbox / "prod.csv")
+    header = Path(golden_csv).read_text().splitlines()[0]
+    (inbox / "empty.csv").write_text(header + "\n")
+    arch = tmp_path / "archived"
+
+    report = run_etl_pipeline(
+        spark,
+        f"file://{inbox}/*.csv",
+        mapping_config_path,
+        output_dir=str(tmp_path / "out"),
+        archive=True,
+        archive_dir=str(arch),
+    )
+    assert (report.total_records, report.rows_inserted) == (9, 6)
+    assert list(inbox.iterdir()) == []
+    assert sorted(p.name.split("_", 2)[2] for p in arch.iterdir()) == ["empty.csv", "prod.csv"]
+    assert len(report.archived) == 2
+
+
 def test_read_jsonl_explicit_schema_and_corrupt_capture(spark, tmp_path):
     from manufacturing_data_integration_tool_spark.sources.readers import read_jsonl
 

@@ -1,8 +1,9 @@
 """Structured Streaming file pipeline + event-time windows (SURVEY.md §2.9)."""
 
+import dataclasses
 import shutil
-import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from manufacturing_data_integration_tool_spark import load_config
@@ -36,11 +37,33 @@ def test_file_stream_drains_and_archives(spark, golden_csv, mapping_config_path,
     errs = spark.read.parquet(str(tmp_path / "out" / "validation_errors"))
     assert qd.count() == 12  # 6 valid x 2 files
     assert errs.count() == 8
-    # cleanSource=archive moves consumed files (async; allow a beat)
-    deadline = time.time() + 30
-    while time.time() < deadline and list(inbox.glob("*.csv")):
-        time.sleep(1)
+    # each micro-batch archives its own files before it returns
     assert list(inbox.glob("*.csv")) == []
+    assert len(list((tmp_path / "arch").glob("*_prod_*.csv"))) == 2
+
+
+def test_file_stream_fail_fast_stops_before_sinks(spark, golden_csv, mapping_config_path, tmp_path):
+    """error_handling=fail_fast aborts the micro-batch (and so the query)
+    before any sink write or archive, like the batch pipeline."""
+    cfg = load_config(mapping_config_path)
+    cfg = dataclasses.replace(cfg, etl=dataclasses.replace(cfg.etl, error_handling="fail_fast"))
+    inbox = tmp_path / "in"
+    inbox.mkdir()
+    shutil.copy(golden_csv, inbox / "prod_0.csv")
+
+    q = start_file_stream(
+        spark,
+        str(inbox),
+        cfg,
+        str(tmp_path / "out"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        archive_dir=str(tmp_path / "arch"),
+        available_now=True,
+    )
+    with pytest.raises(Exception, match="fail_fast: 3 of 9 rows invalid"):
+        q.awaitTermination(120)
+    assert not (tmp_path / "out" / "quality_data").exists()
+    assert [p.name for p in inbox.glob("*.csv")] == ["prod_0.csv"]
 
 
 def test_windowed_event_counts_batch_parity(spark, sf_dir):
