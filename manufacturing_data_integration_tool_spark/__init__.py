@@ -22,7 +22,7 @@ from .config import (
     parse_config_xml,
     spark_type_for,
 )
-from .plans import ValidationResult, annotate_errors, validate
+from .plans import ValidationResult, validate
 
 __all__ = [
     "EtlSettings",
@@ -36,7 +36,6 @@ __all__ = [
     "parse_config_xml",
     "spark_type_for",
     "ValidationResult",
-    "annotate_errors",
     "validate",
 ]
 

@@ -6,8 +6,9 @@ the glob-batch driver (``src/main.py:34-55``). Differences by design:
 * the whole glob is ONE distributed read (lineage kept per-file via
   ``input_file_name()``), not a driver loop;
 * validation is one Catalyst plan (see ``plans.validator``), not a row loop;
-* the valid-rows load is one ``df.write`` (parquet/Delta/JDBC), not per-row
-  INSERTs with manual commit batching;
+* each sink is one parquet ``df.write`` under ``output_dir``, not per-row
+  INSERTs with manual commit batching (JDBC is a sink-level format,
+  ``sources.sinks``);
 * error policy: ``continue`` (reference default) marks a failed file's rows
   and keeps going — at-least-once per file, like the reference's
   try/except-per-file loop (``src/main.py:26-31``);
@@ -19,6 +20,7 @@ the glob-batch driver (``src/main.py:34-55``). Differences by design:
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from datetime import datetime
 from typing import Any, Mapping, Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -28,7 +30,7 @@ from .plans.rules import ERRORS
 from .plans.validator import ValidationResult, validate
 from .sources.archive import archive_file
 from .sources.readers import FILE_SOURCE_COL, read_source_csv
-from .sources.sinks import jdbc_writer_options, write_errors, write_valid
+from .sources.sinks import write_errors, write_valid
 
 __all__ = [
     "PipelineReport",
@@ -109,8 +111,6 @@ def run_etl_pipeline(
     config: IntegrationConfig | str,
     *,
     output_dir: Optional[str] = None,
-    sink_format: str = "parquet",
-    jdbc: bool = False,
     lookup_values: Optional[Mapping[str, Any]] = None,
     dim_tables: Optional[Mapping[str, DataFrame]] = None,
     extensions: bool = False,
@@ -118,13 +118,13 @@ def run_etl_pipeline(
     archive_dir: Optional[str] = None,
 ) -> PipelineReport:
     """End-to-end run over one file or a glob. ``output_dir`` receives
-    ``quality_data/`` and ``validation_errors/`` for file-format sinks."""
+    ``quality_data/`` and ``validation_errors/`` as parquet."""
     cfg = load_config(config) if isinstance(config, str) else config
     do_archive = cfg.etl.archive_processed_files if archive is None else archive
     return _process(
         spark, read_source_csv(spark, input_path, cfg), cfg,
-        output_dir=output_dir, sink_format=sink_format, jdbc=jdbc,
-        lookup_values=lookup_values, dim_tables=dim_tables, extensions=extensions,
+        output_dir=output_dir, lookup_values=lookup_values,
+        dim_tables=dim_tables, extensions=extensions,
         archive_dir=archive_dir if do_archive else None,
     )
 
@@ -135,8 +135,6 @@ def _process(
     cfg: IntegrationConfig,
     *,
     output_dir: Optional[str] = None,
-    sink_format: str = "parquet",
-    jdbc: bool = False,
     lookup_values: Optional[Mapping[str, Any]] = None,
     dim_tables: Optional[Mapping[str, DataFrame]] = None,
     extensions: bool = False,
@@ -145,8 +143,8 @@ def _process(
     """The one per-frame pass behind the batch pipeline, each file-stream
     micro-batch and the CLI dry run: validate -> per-file counts -> error
     preview -> fail_fast gate -> sinks -> archive. ``df`` carries
-    ``FileSource`` lineage; no sink is written when neither ``jdbc`` nor
-    ``output_dir`` is given, and nothing is archived without ``archive_dir``."""
+    ``FileSource`` lineage; no sink is written without ``output_dir``, and
+    nothing is archived without ``archive_dir``."""
     report = PipelineReport()
     result: ValidationResult = validate(
         df, cfg, lookup_values=lookup_values, dim_tables=dim_tables, extensions=extensions
@@ -184,16 +182,11 @@ def _process(
             if report.invalid_records > 0:
                 raise ValidationFailFast(report)
 
-        target = project_to_target(result.valid, cfg)
-        if jdbc:
-            opts = jdbc_writer_options(cfg.target, cfg.etl)
-            report.rows_inserted = write_valid(target, "", fmt="jdbc", jdbc_options=opts)
-            report.errors_logged = write_errors(result.errors, "", fmt="jdbc", jdbc_options=opts)
-        elif output_dir:
-            report.rows_inserted = write_valid(target, f"{output_dir}/quality_data", fmt=sink_format)
-            report.errors_logged = write_errors(
-                result.errors, f"{output_dir}/validation_errors", fmt=sink_format
+        if output_dir:
+            report.rows_inserted = write_valid(
+                project_to_target(result.valid, cfg), f"{output_dir}/quality_data"
             )
+            report.errors_logged = write_errors(result.errors, f"{output_dir}/validation_errors")
         else:
             report.rows_inserted = report.valid_records
             report.errors_logged = sum(r["errors"] for r in per_file)
@@ -203,9 +196,10 @@ def _process(
     if archive_dir:
         # driver-side file-index metadata (no job); it lists header-only
         # files too. A foreachBatch micro-batch has none, so fall back to
-        # the files that produced rows.
+        # the files that produced rows. One stamp for the whole call.
+        now = datetime.now()
         for path in sorted(df.inputFiles() or [f["file"] for f in report.file_counts]):
-            report.archived.append(archive_file(spark, path, archive_dir))
+            report.archived.append(archive_file(spark, path, archive_dir, now=now))
 
     return report
 

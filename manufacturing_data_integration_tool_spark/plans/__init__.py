@@ -1,5 +1,5 @@
-from .rules import CompileContext, ERROR_STRUCT_TYPE, ERRORS_ARRAY_TYPE, compile_rule, register_rule
-from .validator import ValidationResult, annotate_errors, validate, with_row_index
+from .rules import CompileContext, ERROR_STRUCT_TYPE, ERRORS_ARRAY_TYPE, compile_rule
+from .validator import ValidationResult, validate
 from . import dataset_rules
 
 __all__ = [
@@ -7,10 +7,7 @@ __all__ = [
     "ERROR_STRUCT_TYPE",
     "ERRORS_ARRAY_TYPE",
     "compile_rule",
-    "register_rule",
     "ValidationResult",
-    "annotate_errors",
     "validate",
-    "with_row_index",
     "dataset_rules",
 ]

@@ -34,7 +34,7 @@ fails, else NULL; the validator packs them with ``array_compact``.
 from __future__ import annotations
 
 from dataclasses import dataclass, field as dc_field
-from typing import Any, Callable, Mapping, Optional
+from typing import Any, Mapping, Optional
 
 from pyspark.sql import Column, functions as F
 from pyspark.sql import types as T
@@ -47,7 +47,6 @@ __all__ = [
     "error_struct",
     "compile_rule",
     "compile_field_errors",
-    "register_rule",
     "anchored",
 ]
 
@@ -70,20 +69,16 @@ class CompileContext:
 
     ``lookup_values`` maps "table.column" -> iterable of allowed literals
     (small dims); large dims belong in ``dataset_rules.referential_check``.
-    ``extensions=True`` additionally compiles rule kinds the reference only
-    *declared* (``unique``, ``outlier_detection`` — SURVEY.md P7/P8).
     """
 
     lookup_values: dict[str, Any] = dc_field(default_factory=dict)
-    extensions: bool = False
     timestamp_field: Optional[str] = None
-    # lookup rules with no registered literal set: raising beats the
+    # lookup rules with no registered literal set raise: that beats the
     # reference's silent fall-through (src/data_validator.py:197 simply
     # never dispatches an unknown column) — a misspelled lookup table
     # must not silently disable a validation. Tables listed in
     # ``deferred_lookup_tables`` (a referential-integrity rule or dim
     # table is configured for them) legitimately compile to None here.
-    strict_lookup: bool = True
     deferred_lookup_tables: frozenset = frozenset()
 
 
@@ -107,19 +102,7 @@ def anchored(pattern: str) -> str:
 # (error struct when failing, NULL when passing)
 # ---------------------------------------------------------------------------
 
-RuleCompiler = Callable[[str, Column, Mapping[str, Any], CompileContext], Optional[Column]]
-_REGISTRY: dict[str, RuleCompiler] = {}
 
-
-def register_rule(kind: str) -> Callable[[RuleCompiler], RuleCompiler]:
-    def deco(fn: RuleCompiler) -> RuleCompiler:
-        _REGISTRY[kind] = fn
-        return fn
-
-    return deco
-
-
-@register_rule("not_null")
 def _not_null(fname: str, c: Column, params: Mapping[str, Any], ctx: CompileContext) -> Column:
     # rlike('^\s*$'), not trim()=='': F.trim strips only ASCII spaces, while
     # the reference's str.strip() (src/data_validator.py:141) also rejects
@@ -128,7 +111,6 @@ def _not_null(fname: str, c: Column, params: Mapping[str, Any], ctx: CompileCont
     return F.when(failing, error_struct(fname, c, "NOT_NULL", f"{fname} cannot be null"))
 
 
-@register_rule("range")
 def _range(fname: str, c: Column, params: Mapping[str, Any], ctx: CompileContext) -> Column:
     num = c.try_cast("double")
     lo = params.get("min")
@@ -157,7 +139,6 @@ def _range(fname: str, c: Column, params: Mapping[str, Any], ctx: CompileContext
     return expr
 
 
-@register_rule("regex")
 def _regex(fname: str, c: Column, params: Mapping[str, Any], ctx: CompileContext) -> Optional[Column]:
     pattern = params.get("pattern")
     if not pattern:
@@ -175,7 +156,6 @@ def _regex(fname: str, c: Column, params: Mapping[str, Any], ctx: CompileContext
     )
 
 
-@register_rule("date_range")
 def _date_range(fname: str, c: Column, params: Mapping[str, Any], ctx: CompileContext) -> Column:
     ts = F.coalesce(
         F.try_to_timestamp(c.cast("string")),
@@ -200,7 +180,6 @@ def _date_range(fname: str, c: Column, params: Mapping[str, Any], ctx: CompileCo
     return expr
 
 
-@register_rule("lookup")
 def _lookup(fname: str, c: Column, params: Mapping[str, Any], ctx: CompileContext) -> Optional[Column]:
     table = params.get("table", "")
     column = params.get("column", "")
@@ -217,23 +196,13 @@ def _lookup(fname: str, c: Column, params: Mapping[str, Any], ctx: CompileContex
             # anti-join) owns the validation; per-row compilation has
             # nothing to check.
             return None
-        if ctx.strict_lookup:
-            raise ValueError(
-                f"lookup rule on '{fname}' against {table}.{column} has no "
-                "literal set registered and no referential path configured — "
-                "a misspelled table would silently disable this validation. "
-                "Register the set in lookup_values, configure a "
-                "referential_integrity rule / dim table, or pass "
-                "strict_lookup=False to restore the warn-and-skip behavior."
-            )
-        import warnings
-
-        warnings.warn(
-            f"lookup rule on '{fname}' against {table}.{column} compiled to a "
-            "no-op: no literal set registered and no referential path configured",
-            stacklevel=2,
+        raise ValueError(
+            f"lookup rule on '{fname}' against {table}.{column} has no "
+            "literal set registered and no referential path configured — "
+            "a misspelled table would silently disable this validation. "
+            "Register the set in lookup_values or configure a "
+            "referential_integrity rule / dim table."
         )
-        return None
     vals = sorted(str(v) for v in values)
     failing = ~c.cast("string").isin(vals)
     return F.when(
@@ -247,15 +216,22 @@ def _lookup(fname: str, c: Column, params: Mapping[str, Any], ctx: CompileContex
     )
 
 
+_COMPILERS = {
+    "not_null": _not_null,
+    "range": _range,
+    "regex": _regex,
+    "date_range": _date_range,
+    "lookup": _lookup,
+}
+
+
 def compile_rule(fname: str, c: Column, kind: str, params: Mapping[str, Any], ctx: CompileContext) -> Optional[Column]:
     """Compile a single rule; unknown kinds return None — matching the
     reference's silent fall-through for undispatched rule types
     (``src/data_validator.py:202``). Window/dataset-scoped kinds
     (``unique``, ``outlier_detection``) are handled in ``dataset_rules``."""
-    fn = _REGISTRY.get(kind)
-    if fn is None:
-        return None
-    return fn(fname, c, params, ctx)
+    fn = _COMPILERS.get(kind)
+    return None if fn is None else fn(fname, c, params, ctx)
 
 
 def missing_test(c: Column, dtype: T.DataType) -> Column:

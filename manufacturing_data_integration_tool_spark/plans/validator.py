@@ -19,15 +19,16 @@ whole-stage-codegen'd and scales with partitions.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Any, Iterable, Mapping, Optional
+from typing import Any, Mapping, Optional
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from ..config import FieldMapping, GlobalRule, IntegrationConfig
+from ..config import IntegrationConfig
+from ..sources.readers import FILE_SOURCE_COL
 from . import dataset_rules
-from .rules import ERRORS, CompileContext, compile_field_errors
+from .rules import ERRORS, ERRORS_ARRAY_TYPE, CompileContext, compile_field_errors
 
-__all__ = ["ValidationResult", "annotate_errors", "validate", "with_row_index"]
+__all__ = ["ValidationResult", "validate"]
 
 # The reference demos its lookup rule against a hardcoded product set
 # (``src/data_validator.py:197``); we register the same set as a literal
@@ -48,49 +49,31 @@ class ValidationResult:
     errors: DataFrame  # exploded error report (one row per error)
 
 
-def with_row_index(df: DataFrame, order_by: Optional[list[str]] = None, name: str = "row_index") -> DataFrame:
-    """Deterministic row index when an ordering exists; otherwise a
-    partition-stable id. pandas row indices are file order — at distributed
-    scale "file order" is only meaningful per file, so error reports should
-    be keyed on natural columns; this helper exists for compat/tests.
-
-    .. warning:: The ``order_by`` form is an UNPARTITIONED global-sort
-       window — every row funnels through ONE task. It exists solely so the
-       9-row golden fixture can reproduce the reference's pandas row
-       numbering byte-for-byte. Never call it from a pipeline or query
-       path; nothing in the production surface does."""
-    if order_by:
-        w = Window.orderBy(*[F.col(c) for c in order_by])
-        return df.withColumn(name, F.row_number().over(w) - 1)
-    return df.withColumn(name, F.monotonically_increasing_id())
-
-
 def check_columns(df: DataFrame, config: IntegrationConfig) -> None:
     missing = set(config.source_columns) - set(df.columns)
     if missing:
         raise ValueError(f"Missing required columns in CSV: {missing}")
 
 
-def annotate_errors(
+def validate(
     df: DataFrame,
     config: IntegrationConfig,
     *,
     lookup_values: Optional[Mapping[str, Any]] = None,
     dim_tables: Optional[Mapping[str, DataFrame]] = None,
     extensions: bool = False,
-    scope_cols: Optional[list[str]] = None,
-    strict_lookup: bool = True,
-) -> DataFrame:
-    """Append the ``errors`` array column (row rules + dataset rules).
+) -> ValidationResult:
+    """Full validation pass -> (annotated, valid, invalid, errors report).
 
-    ``scope_cols`` scopes dataset rules (duplicates, unique-daily, zscore
-    stats) to sub-universes — pass the file-lineage column when a glob was
-    read as one DataFrame, reproducing the reference's per-file loop. If
-    omitted, the ``FileSource`` lineage column is picked up automatically.
+    ``annotated`` is ``df`` plus the ``errors`` array (row rules + dataset
+    rules). When ``df`` carries the ``FileSource`` lineage column the
+    dataset rules (duplicates, unique-daily, zscore stats) are scoped per
+    file, so a glob read as one DataFrame reproduces the reference's
+    per-file loop. The error report keeps every source column alongside
+    the exploded error.
     """
     check_columns(df, config)
-    if scope_cols is None:
-        scope_cols = ["FileSource"] if "FileSource" in df.columns else []
+    scope_cols = [FILE_SOURCE_COL] if FILE_SOURCE_COL in df.columns else []
     deferred = frozenset(
         str(g.params.get("foreignTable", ""))
         for g in config.global_rules
@@ -98,9 +81,7 @@ def annotate_errors(
     ) | frozenset(dim_tables or ())
     ctx = CompileContext(
         lookup_values=dict(REFERENCE_DEMO_LOOKUPS) | dict(lookup_values or {}),
-        extensions=extensions,
         timestamp_field=config.timestamp_field(),
-        strict_lookup=strict_lookup,
         deferred_lookup_tables=deferred,
     )
     schema = {f.name: f.dataType for f in df.schema.fields}
@@ -111,10 +92,7 @@ def annotate_errors(
     ]
     if not field_arrays:
         # config with zero FieldMappings: every row is valid (typed empty array)
-        from .rules import ERRORS_ARRAY_TYPE
-
-        errors_col = F.lit(None).cast(ERRORS_ARRAY_TYPE)
-        errors_col = F.coalesce(errors_col, F.array().cast(ERRORS_ARRAY_TYPE))
+        errors_col = F.array().cast(ERRORS_ARRAY_TYPE)
     elif len(field_arrays) == 1:
         errors_col = field_arrays[0]
     else:
@@ -147,41 +125,16 @@ def annotate_errors(
             if fk and dim is not None:
                 out = dataset_rules.referential_check(out, fk, dim, foreign_table=table)
 
-    return out
-
-
-def validate(
-    df: DataFrame,
-    config: IntegrationConfig,
-    *,
-    lookup_values: Optional[Mapping[str, Any]] = None,
-    dim_tables: Optional[Mapping[str, DataFrame]] = None,
-    extensions: bool = False,
-    id_columns: Optional[list[str]] = None,
-    scope_cols: Optional[list[str]] = None,
-    strict_lookup: bool = True,
-) -> ValidationResult:
-    """Full validation pass -> (annotated, valid, invalid, errors report).
-
-    ``id_columns`` restricts the error report's carried row identity; by
-    default every source column is kept alongside the exploded error.
-    """
-    annotated = annotate_errors(
-        df, config, lookup_values=lookup_values, dim_tables=dim_tables,
-        extensions=extensions, scope_cols=scope_cols,
-        strict_lookup=strict_lookup,
-    )
     has_errors = F.size(F.col(ERRORS)) > 0
-    valid = annotated.filter(~has_errors).drop(ERRORS)
-    invalid = annotated.filter(has_errors)
+    valid = out.filter(~has_errors).drop(ERRORS)
+    invalid = out.filter(has_errors)
 
-    carry = id_columns if id_columns else [c for c in df.columns]
     err = F.explode(F.col(ERRORS)).alias("error")
-    errors = invalid.select(*carry, err).select(
-        *carry,
+    errors = invalid.select(*df.columns, err).select(
+        *df.columns,
         F.col("error.field_name").alias("field_name"),
         F.col("error.field_value").alias("field_value"),
         F.col("error.error_type").alias("error_type"),
         F.col("error.error_message").alias("error_message"),
     )
-    return ValidationResult(annotated=annotated, valid=valid, invalid=invalid, errors=errors)
+    return ValidationResult(annotated=out, valid=valid, invalid=invalid, errors=errors)

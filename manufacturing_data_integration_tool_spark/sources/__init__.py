@@ -1,5 +1,5 @@
 from .readers import read_source_csv, read_source_jsonl, read_tables, TABLE_NAMES
-from .sinks import write_errors, write_valid, jdbc_writer_options
+from .sinks import write_errors, write_valid
 from .archive import archive_file
 from .introspect import parquet_footer_audit
 
@@ -11,6 +11,5 @@ __all__ = [
     "TABLE_NAMES",
     "write_errors",
     "write_valid",
-    "jdbc_writer_options",
     "archive_file",
 ]

@@ -2,7 +2,8 @@
 
 Reference: ``archive_file`` renames into ``data/processed/`` with a
 ``{YYYYmmdd_HHMMSS}_{name}`` prefix, gated by the
-``ArchiveProcessedFiles`` flag (``src/etl_processor.py:160-179``).
+``ArchiveProcessedFiles`` flag (``src/etl_processor.py:160-179``); here the
+pipeline resolves that flag and always names the archive directory.
 
 Uses the Hadoop FS API through the active session (works for local paths,
 ``file:`` URIs and any configured DFS). Batch runs and file-stream
@@ -25,27 +26,25 @@ from pyspark.sql import SparkSession
 def archive_file(
     spark: SparkSession,
     source_path: str,
-    archive_dir: Optional[str] = None,
+    archive_dir: str,
     *,
-    enabled: bool = True,
     now: Optional[datetime] = None,
-) -> Optional[str]:
-    """Move ``source_path`` into ``archive_dir`` with a timestamp prefix.
-    Returns the destination path, or None when disabled (reference gate,
-    etl_processor.py:162-163)."""
-    if not enabled:
-        return None
+) -> str:
+    """Move ``source_path`` into ``archive_dir`` as ``<stamp>_<name>`` and
+    return the destination. When that name is taken (one glob matched the
+    same file name in two directories), the first free
+    ``<stamp>_<stem>-<n><suffix>`` is used; nothing is ever overwritten."""
     src = Path(source_path)
-    dest_dir = Path(archive_dir) if archive_dir else src.parent / "processed"
     stamp = (now or datetime.now()).strftime("%Y%m%d_%H%M%S")
-    dest = dest_dir / f"{stamp}_{src.name}"
-
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    conf = jsc.hadoopConfiguration()
-    src_p = jvm.org.apache.hadoop.fs.Path(str(src))
-    fs = src_p.getFileSystem(conf)
-    dest_p = jvm.org.apache.hadoop.fs.Path(str(dest))
+    hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    src_p = hpath(str(src))
+    fs = src_p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    dest = Path(archive_dir) / f"{stamp}_{src.name}"
+    n = 0
+    while fs.exists(hpath(str(dest))):
+        n += 1
+        dest = Path(archive_dir) / f"{stamp}_{src.stem}-{n}{src.suffix}"
+    dest_p = hpath(str(dest))
     fs.mkdirs(dest_p.getParent())
     if not fs.rename(src_p, dest_p):
         raise IOError(f"archive rename failed: {src} -> {dest}")

@@ -5,69 +5,20 @@ Reference behavior being re-expressed (SURVEY.md S4/S5):
 * valid rows -> target table with literal ``ValidationStatus='VALID'`` and
   ``FileSource`` lineage (``src/etl_processor.py:53-108``). The reference
   does row-wise parameterized INSERTs with a manual 1000-row commit loop;
-  on Spark that's a single ``df.write`` — JDBC ``batchsize``/``numPartitions``
-  options replace the hand-rolled commit chunking, and the parquet/Delta
-  path is a plain distributed append.
+  on Spark that's a single ``df.write``. The batch pipeline lands parquet;
+  ``fmt="jdbc"`` is a sink-level format whose ``batchsize``/``numPartitions``
+  options replace the hand-rolled commit chunking.
 * validation errors -> error table with ``field_value`` truncated to 255
-  chars (``src/etl_processor.py:110-144``).
+  chars (``src/etl_processor.py:110-144``), landed by the same writer.
 """
 
 from __future__ import annotations
 
 from typing import Mapping, Optional
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
-from ..config import EtlSettings, TargetSettings
-
-ERROR_SINK_COLUMNS = ("FileSource", "ErrorType", "ErrorMessage", "FieldName", "FieldValue")
-
-
-def jdbc_writer_options(target: TargetSettings, etl: EtlSettings) -> dict[str, str]:
-    """JDBC writer options equivalent to the reference's pyodbc loop:
-    ``batchsize`` replaces the manual commit-every-N (etl_processor.py:96-98)."""
-    return {
-        "url": target.connection_string,
-        "dbtable": target.target_table,
-        "batchsize": str(etl.batch_size),
-        "isolationLevel": "READ_COMMITTED",
-    }
-
-
-def _write_counted(df: DataFrame, write) -> int:
-    """Run ONE write job and return the row count via an ``observe`` metric —
-    the count rides along with the write instead of a second full scan
-    (the reference reports rows_inserted, etl_processor.py:103; a separate
-    ``df.count()`` would execute the whole upstream plan twice, which at
-    100 TB is two scans of the table)."""
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    observed = df.observe(obs, F.count(F.lit(1)).alias("n"))
-    write(observed)
-    return int(obs.get["n"])
-
-
-def _pre_coalesce_for_jdbc(
-    df: DataFrame, jdbc_options: Optional[Mapping[str, str]]
-) -> tuple[DataFrame, Optional[Mapping[str, str]]]:
-    """Take over the JDBC ``numPartitions`` cap BELOW the observe node.
-
-    When the ``numPartitions`` option reaches Spark's V1 JDBC writer, the
-    writer probes/derives the Dataset JVM-side and the execution that
-    actually moves rows no longer reports the plan's ``CollectMetrics``
-    node — ``Observation.get`` deterministically returns 0 while every
-    row lands (verified against embedded Derby in
-    tests/test_jdbc_sink.py: ANY write with the option set reports 0;
-    without it the count is always right). So the option never reaches
-    the writer: we apply the identical semantics ourselves with
-    ``coalesce`` (which, like the option, only ever REDUCES partition
-    count) under the observe node, and strip it from the option map."""
-    if jdbc_options and "numPartitions" in jdbc_options:
-        opts = dict(jdbc_options)
-        n = int(opts.pop("numPartitions"))
-        return df.coalesce(n), opts
-    return df, jdbc_options
+from .readers import FILE_SOURCE_COL
 
 
 def write_valid(
@@ -75,30 +26,38 @@ def write_valid(
     path_or_table: str,
     *,
     fmt: str = "parquet",
-    mode: str = "append",
     jdbc_options: Optional[Mapping[str, str]] = None,
-    partition_by: Optional[list[str]] = None,
 ) -> int:
-    """Append valid rows to the target sink; returns the row count."""
+    """Append ``df`` to the sink in ONE write job and return the row count.
+
+    The count is an ``observe`` metric that rides along with the write
+    instead of a second full scan (the reference reports rows_inserted,
+    etl_processor.py:103; a separate ``df.count()`` would execute the whole
+    upstream plan twice, which at 100 TB is two scans of the table)."""
+    if fmt == "jdbc" and jdbc_options and "numPartitions" in jdbc_options:
+        # When the ``numPartitions`` option reaches Spark's V1 JDBC writer,
+        # the writer probes/derives the Dataset JVM-side and the execution
+        # that actually moves rows no longer reports the plan's
+        # ``CollectMetrics`` node — ``Observation.get`` deterministically
+        # returns 0 while every row lands (verified against embedded Derby in
+        # tests/test_jdbc_sink.py). So the option never reaches the writer:
+        # ``coalesce`` (which, like the option, only ever REDUCES partition
+        # count) applies the same cap below the observe node.
+        jdbc_options = dict(jdbc_options)
+        df = df.coalesce(int(jdbc_options.pop("numPartitions")))
+    obs = Observation()
+    writer = df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("append").format(fmt)
     if fmt == "jdbc":
-        df, jdbc_options = _pre_coalesce_for_jdbc(df, jdbc_options)
-
-    def write(observed: DataFrame) -> None:
-        writer = observed.write.mode(mode)
-        if fmt == "jdbc":
-            writer.format("jdbc").options(**(jdbc_options or {})).save()
-        else:
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.format(fmt).save(path_or_table)
-
-    return _write_counted(df, write)
+        writer.options(**(jdbc_options or {})).save()
+    else:
+        writer.save(path_or_table)
+    return int(obs.get["n"])
 
 
-def shape_errors_for_sink(errors: DataFrame, file_source: Optional[str] = None) -> DataFrame:
+def shape_errors_for_sink(errors: DataFrame) -> DataFrame:
     """Error report -> sink schema, with the reference's 255-char value cap
-    (etl_processor.py:134)."""
-    src = F.col("FileSource") if "FileSource" in errors.columns else F.lit(file_source or "")
+    (etl_processor.py:134). Without lineage ``FileSource`` is ``""``."""
+    src = F.col(FILE_SOURCE_COL) if FILE_SOURCE_COL in errors.columns else F.lit("")
     return errors.select(
         src.alias("FileSource"),
         F.col("error_type").alias("ErrorType"),
@@ -112,23 +71,11 @@ def write_errors(
     errors: DataFrame,
     path_or_table: str,
     *,
-    file_source: Optional[str] = None,
     fmt: str = "parquet",
-    mode: str = "append",
     jdbc_options: Optional[Mapping[str, str]] = None,
 ) -> int:
-    shaped = shape_errors_for_sink(errors, file_source)
-    if fmt == "jdbc":
-        shaped, jdbc_options = _pre_coalesce_for_jdbc(shaped, jdbc_options)
-
-    def write(observed: DataFrame) -> None:
-        writer = observed.write.mode(mode)
-        if fmt == "jdbc":
-            writer.format("jdbc").options(**(jdbc_options or {})).save()
-        else:
-            writer.format(fmt).save(path_or_table)
-
-    return _write_counted(shaped, write)
+    """Append the shaped error report to the error sink; returns the row count."""
+    return write_valid(shape_errors_for_sink(errors), path_or_table, fmt=fmt, jdbc_options=jdbc_options)
 
 
 def write_orc(df, path: str, *, mode: str = "overwrite", partition_by=None):

@@ -81,7 +81,7 @@ def test_error_value_truncated_to_255(spark, mapping_config_path, tmp_path):
     )
     df = spark.createDataFrame([("y" * 1000,)], "v string")
     res = validate(df, cfg)
-    shaped = shape_errors_for_sink(res.errors, "f.csv").collect()
+    shaped = shape_errors_for_sink(res.errors).collect()
     assert len(shaped[0]["FieldValue"]) == 255
 
 
@@ -123,6 +123,30 @@ def test_archive_after_uri_glob_moves_every_matched_file(spark, golden_csv, mapp
     assert list(inbox.iterdir()) == []
     assert sorted(p.name.split("_", 2)[2] for p in arch.iterdir()) == ["empty.csv", "prod.csv"]
     assert len(report.archived) == 2
+
+
+def test_archive_same_file_name_from_two_directories(spark, golden_csv, mapping_config_path, tmp_path):
+    """One glob matching ``a/prod.csv`` and ``b/prod.csv`` archives both under
+    distinct names instead of failing the second rename and leaving a file
+    in the inbox to be loaded again."""
+    inbox = tmp_path / "inbox"
+    for sub in ("a", "b"):
+        (inbox / sub).mkdir(parents=True)
+        shutil.copy(golden_csv, inbox / sub / "prod.csv")
+    arch = tmp_path / "archived"
+
+    report = run_etl_pipeline(
+        spark,
+        str(inbox / "*" / "*.csv"),
+        mapping_config_path,
+        output_dir=str(tmp_path / "out"),
+        archive=True,
+        archive_dir=str(arch),
+    )
+    assert report.total_records == 18
+    assert len(set(report.archived)) == 2
+    assert sorted(p.name.split("_", 2)[2] for p in arch.iterdir()) == ["prod-1.csv", "prod.csv"]
+    assert list(inbox.glob("*/*.csv")) == []
 
 
 def test_read_jsonl_explicit_schema_and_corrupt_capture(spark, tmp_path):

@@ -97,15 +97,10 @@ def test_lookup_literal_set(spark):
     from manufacturing_data_integration_tool_spark.plans.validator import validate as v2
 
     df = spark.createDataFrame([("A",), ("Z",)], "v string")
-    # no lookup set registered for T.C and no referential path: STRICT by
-    # default (r4 verdict #7) — a misspelled table must not silently
-    # disable the validation
+    # no lookup set registered for T.C and no referential path: raises — a
+    # misspelled table must not silently disable the validation
     with pytest.raises(ValueError, match="lookup rule on 'v'"):
         v2(df, cfg)
-    # explicit opt-out restores the warn-and-skip behavior
-    with pytest.warns(UserWarning, match="compiled to a no-op"):
-        res0 = v2(df, cfg, strict_lookup=False)
-    assert res0.errors.count() == 0 and res0.valid.count() == 2
 
     res = v2(df, cfg, lookup_values={"T.C": {"A", "B"}})
     errs2 = [(r.field_name, r.error_type) for r in res.errors.collect()]
