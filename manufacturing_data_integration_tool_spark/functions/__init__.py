@@ -1,8 +1,8 @@
 """Reusable scalar/aggregate expression helpers (SURVEY.md §2.8 surface).
 
 These are the cross-cutting expression idioms the engine standardizes on:
-deterministic aggregation (exact decimal sums), event-time integer math for
-nanosecond payloads, and cross-engine-stable hashing.
+deterministic aggregation (exact decimal sums) and the nanosecond time
+constants for integer event-time math.
 """
 
 from .layout import interleave_bits_16, write_zordered, zorder_key_2d
@@ -12,11 +12,7 @@ from .skyline import skyline_2d
 from .scalars import (
     HOUR_NS,
     MICROS_PER_HOUR,
-    bucket_ns,
-    exact_avg,
     exact_sum,
-    nanos_to_micros,
-    stable_hash,
 )
 
 __all__ = [
@@ -26,11 +22,7 @@ __all__ = [
     "zorder_key_2d",
     "HOUR_NS",
     "MICROS_PER_HOUR",
-    "bucket_ns",
-    "exact_avg",
     "exact_sum",
-    "nanos_to_micros",
-    "stable_hash",
     "merge_upsert",
     "key_skew_profile",
     "salted_join",

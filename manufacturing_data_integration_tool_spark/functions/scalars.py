@@ -9,8 +9,8 @@ results must be reproducible across partitionings or engines):
   double: identical no matter how Spark splits the partials, and identical
   to any other engine using the same decimal scale.
 * Event-time columns stored as INT64 nanoseconds stay in integer math
-  (``div``) for bucketing — int64 nanos overflow double's 53-bit mantissa,
-  so float division would corrupt buckets.
+  (``div`` by ``HOUR_NS``) for bucketing — int64 nanos overflow double's
+  53-bit mantissa, so float division would corrupt buckets.
 """
 
 from __future__ import annotations
@@ -27,39 +27,3 @@ def exact_sum(col: Column | str, scale: str = "decimal(30,6)") -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.sum(c.cast(scale)).cast("double")
 
-
-def exact_avg(col: Column | str, round_to: int = 6, scale: str = "decimal(30,6)") -> Column:
-    """Order-independent mean: exact sum / count, rounded once at the end."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.round(exact_sum(c, scale) / F.count(c), round_to)
-
-
-def nanos_to_micros(col: str) -> Column:
-    """INT64 nanoseconds -> INT64 microseconds (integer division)."""
-    return F.expr(f"{_name(col)} div 1000")
-
-
-def bucket_ns(col: str, width_ns: int) -> Column:
-    """Tumbling-window bucket id for an INT64-nanoseconds column. Integer
-    ``div`` — never float division, which loses precision above 2^53."""
-    return F.expr(f"{_name(col)} div {width_ns}")
-
-
-def _name(col: Column | str) -> str:
-    if isinstance(col, str):
-        return col
-    raise TypeError("integer div helpers need a column NAME (SQL expr)")
-
-
-def stable_hash(col: Column | str, algo: str = "xxhash64") -> Column:
-    """Deterministic, cross-run-stable hash of a string column. xxhash64
-    for JVM-internal keys (cheap 64-bit), md5/sha2 when the value must
-    reproduce in other engines."""
-    c = F.col(col) if isinstance(col, str) else col
-    if algo == "xxhash64":
-        return F.xxhash64(c.cast("string"))
-    if algo == "md5":
-        return F.md5(c.cast("string"))
-    if algo == "sha2":
-        return F.sha2(c.cast("string"), 256)
-    raise ValueError(f"unknown hash algo: {algo}")

@@ -1,104 +1,102 @@
-"""Shared materialize-once lever for multi-referenced intermediates.
+"""The one place that decides how an op's intermediate is materialized and
+when it is released.
 
-The r12 optimization round found the systemic plan disease: an expensive
-narrow intermediate (inverted index, LSH tag table, rank table) referenced
-2-4 times downstream is recomputed per reference — Spark's ReuseExchange
-only dedupes identical whole-exchange subtrees, and differently-keyed
-aggregations over the same explode each re-run the scan + explode. The
-fix is to materialize the intermediate once. HOW to materialize is a
-deployment trade, not an algorithm choice (r12 verdict item 3 / ADVICE):
+Strategy follows the session's master:
 
-* ``localCheckpoint(eager=False)`` — truncates lineage AND stores blocks
-  only on executors. Cheapest locally (serialized RDD blocks, no columnar
-  re-encode), but NOT fault-tolerant: under executor loss or dynamic
-  allocation a lost block fails the job instead of recomputing, so it is
-  only safe where executors are stable (local mode, static allocation).
-* ``persist(MEMORY_AND_DISK)`` — lineage-preserving: a lost block is
-  recomputed from the parquet inputs, the correct posture for a real
-  100 TB cluster. Slightly more expensive locally (columnar CachedBatch
-  encode) and does NOT truncate the logical plan.
+* ``local[...]`` — ``localCheckpoint``: lineage truncated, blocks stored
+  only on executors. Cheapest (serialized RDD blocks, no columnar
+  re-encode), but a lost block fails the job instead of recomputing, so it
+  is only safe where executors are stable.
+* any other master — ``persist(MEMORY_AND_DISK)`` for NON-ITERATIVE
+  intermediates (:func:`materialize_once`): a lost block recomputes from
+  the inputs. ITERATIVE round state (:func:`checkpoint_round`) always
+  checkpoints: there lineage growth is the disease, a persisted plan
+  would double per round.
 
-``materialize_once`` picks per the ``spark.mdi.materialize.mode`` session
-conf: ``checkpoint``, ``persist``, or ``auto`` (default — checkpoint under
-a ``local[...]`` master, persist otherwise). The bench/driver contract is
-unchanged (local default = the r12 behavior); cluster users get lineage
-back without touching operator code. Iterative loops (pagerank, kcore,
-hits, label propagation, connected components, the BPE vocab loop) do NOT
-route through this helper: there lineage GROWTH is the disease — a
-persist-only strategy would let the logical plan double per round and
-planning time explode — so they keep ``localCheckpoint`` unconditionally,
-with the failure-domain trade documented in SCALING.md.
+``spark.mdi.materialize.mode=off`` is audit-only (``tools/plan_audit.py
+--full-lineage``): nothing is materialized, so ``explain`` shows the full
+lineage. It changes speed, never results.
 
-Either strategy lives and dies inside one query invocation: nothing is
-keyed on the input path, and the bench releases cached/persisted blocks
-between queries, so every invocation computes from the parquet inputs.
+Release: an op returns a lazy frame, so it cannot free what it made; the
+code that runs the last action can. ``with released():`` (or
+``@released()``) records every frame this module makes while it is open
+and releases each one on exit: ``unpersist()`` for a persisted frame, the
+RDD behind the ``LogicalRDD`` for a local checkpoint (``unpersist()`` does
+not release that). The record lives in a ``ContextVar``, so concurrent
+``foreachBatch`` threads keep their own. Outside a scope nothing is
+recorded or released.
 """
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+from contextvars import ContextVar
+from typing import Iterator, Optional
+
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 MODE_CONF = "spark.mdi.materialize.mode"
 
+_made: ContextVar[Optional[list[DataFrame]]] = ContextVar("mdi_materialized", default=None)
 
-def _mode(df: DataFrame) -> str:
-    try:
-        return df.sparkSession.conf.get(MODE_CONF, "auto")
-    except Exception:
-        return "auto"
+
+def _off(df: DataFrame) -> bool:
+    return df.sparkSession.conf.get(MODE_CONF, "") == "off"
+
+
+def _on_local_master(df: DataFrame) -> bool:
+    return df.sparkSession.conf.get("spark.master", "").startswith("local")
+
+
+def _track(df: DataFrame) -> DataFrame:
+    made = _made.get()
+    if made is not None:
+        made.append(df)
+    return df
 
 
 def materialize_once(df: DataFrame) -> DataFrame:
-    """Materialize a multi-referenced NON-ITERATIVE intermediate once.
-
-    Strategy per ``spark.mdi.materialize.mode`` (see module docstring):
-    ``auto`` (default) / ``checkpoint`` / ``persist`` / ``off``.
-
-    ``off`` is a PLAN-AUDIT-ONLY seam (r12 verdict item 7): it disables
-    the materialization entirely so ``explain`` shows the full upstream
-    lineage instead of an opaque RDD-scan leaf — the sweep uses it to
-    pin pre-checkpoint plan shapes. It changes performance (every
-    reference recomputes), never results; never set it in production.
-    """
-    mode = _mode(df)
-    if mode == "off":
+    """Materialize a multi-referenced NON-ITERATIVE intermediate once:
+    ``localCheckpoint`` under a local master, ``persist(MEMORY_AND_DISK)``
+    otherwise."""
+    if _off(df):
         return df
-    if mode == "auto":
-        master = df.sparkSession.conf.get("spark.master", "")
-        mode = "checkpoint" if master.startswith("local") else "persist"
-    if mode == "persist":
-        from pyspark import StorageLevel
-
-        return df.persist(StorageLevel.MEMORY_AND_DISK)
-    return df.localCheckpoint(eager=False)
+    if _on_local_master(df):
+        return _track(df.localCheckpoint(eager=False))
+    return _track(df.persist(StorageLevel.MEMORY_AND_DISK))
 
 
 def checkpoint_round(df: DataFrame) -> DataFrame:
     """Per-round lineage checkpoint for ITERATIVE ops (pagerank, kcore,
-    hits, label propagation, connected components, the BPE vocab loop).
-
-    ALWAYS ``localCheckpoint`` regardless of ``spark.mdi.materialize.mode``
-    — in an iterative loop lineage GROWTH is the disease: a
-    lineage-preserving persist would let the logical plan double per
-    round and planning time explode, and full re-lineage recovery of
-    round N replays every previous round anyway. The executor-loss
-    failure domain this buys is documented in SCALING.md.
-
-    The single exception is the audit-only ``off`` mode (see
-    :func:`materialize_once`), which disables truncation so the plan
-    sweep can capture a round's full pre-checkpoint subtree.
-    """
-    if _mode(df) == "off":
-        return df
-    return df.localCheckpoint(eager=False)
+    hits, label propagation, connected components, the BPE vocab loop):
+    always ``localCheckpoint``, whatever the master."""
+    return df if _off(df) else _track(df.localCheckpoint(eager=False))
 
 
 def checkpoint_round_eager(df: DataFrame) -> DataFrame:
-    """Eager sibling of :func:`checkpoint_round` for the iterative sites
-    that deliberately materialize mid-loop (pagerank's every-4-rounds
-    checkpoint — the r13 policy sweep measured eager-every-4 FASTER than
-    every lazy variant there). Same audit-only ``off`` escape so the
-    plan sweep sees full lineage."""
-    if _mode(df) == "off":
-        return df
-    return df.localCheckpoint(eager=True)
+    """Eager :func:`checkpoint_round`, for the sites that materialize
+    mid-loop (pagerank's every-4-rounds checkpoint measured fastest eager)."""
+    return df if _off(df) else _track(df.localCheckpoint(eager=True))
+
+
+def _release(df: DataFrame) -> None:
+    if df.is_cached:
+        df.unpersist()
+        return
+    jdf = getattr(df, "_jdf", None)
+    if jdf is not None:  # a local checkpoint plans to one scan of its RDD
+        jdf.queryExecution().sparkPlan().inputRDDs().head().unpersist(False)
+
+
+@contextmanager
+def released() -> Iterator[None]:
+    """Release, on exit, every frame this module made while the scope was
+    open. The frames fail if used after that."""
+    token = _made.set([])
+    try:
+        yield
+    finally:
+        for df in _made.get():
+            _release(df)
+        _made.reset(token)

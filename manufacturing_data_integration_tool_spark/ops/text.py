@@ -1240,9 +1240,10 @@ def frequent_terms(
     hitters. The count is NOT probed via ``df.rdd`` (the
     ``sources/readers.py`` rule: under AQE that materializes query
     stages); instead phase 1 emits one marker row per partition alongside
-    the candidates, the candidate set is checkpointed (it must
+    the candidates, the candidate set is materialized once
+    (``materialize_once``; the marker ``count()`` fills it, and it must
     materialize anyway for the broadcast), and the marker count is read
-    off the tiny checkpointed frame. If the assumed P (defaultParallelism
+    off that tiny frame. If the assumed P (defaultParallelism
     floor, or ``n_partitions``) proves too low, phase 1 re-runs once with
     the measured P — the bar is sound by construction, never by luck.
 
@@ -1271,8 +1272,8 @@ def frequent_terms(
                 {"term": heavy + [None], "pid": [pid] * (len(heavy) + 1)}
             )
 
-        return toks.mapInPandas(_local_counts, "term string, pid int").localCheckpoint(
-            eager=True
+        return toks.mapInPandas(_local_counts, "term string, pid int").transform(
+            materialize_once
         )
 
     p_assumed = max(1, int(n_partitions or spark.sparkContext.defaultParallelism))
@@ -2032,6 +2033,14 @@ def _flesch_count_exprs(text_col: str) -> "tuple[Column, Column, Column]":
     return words, sents, syll
 
 
+def _flesch_x1000_expr(words: Column, sents: Column, syll: Column) -> Column:
+    """Module-private: the Flesch score over the three counts, floor-scaled
+    x1000 — shared by :func:`flesch_reading_ease` and :func:`_screen_flags`."""
+    w, s, y = (c.cast("double") for c in (words, sents, syll))
+    score = F.lit(206.835) - F.lit(1.015) * (w / s) - F.lit(84.6) * (y / w)
+    return F.floor(score * F.lit(1000.0)).cast("bigint")
+
+
 def flesch_reading_ease(
     df: DataFrame,
     text_col: str,
@@ -2067,14 +2076,11 @@ def flesch_reading_ease(
         sents.alias("n_sentences"),
         syll.alias("n_syllables"),
     ).filter(F.col("n_words") > 0)
-    w = F.col("n_words").cast("double")
-    s = F.col("n_sentences").cast("double")
-    y = F.col("n_syllables").cast("double")
-    score = (
-        F.lit(206.835) - F.lit(1.015) * (w / s) - F.lit(84.6) * (y / w)
-    )
     return base.withColumn(
-        "flesch_x1000", F.floor(score * F.lit(1000.0)).cast("bigint")
+        "flesch_x1000",
+        _flesch_x1000_expr(
+            F.col("n_words"), F.col("n_sentences"), F.col("n_syllables")
+        ),
     )
 
 
@@ -2083,9 +2089,9 @@ def _screen_flags(
     text_col: str = "text",
     id_col: str = "doc_id",
     *,
-    min_words: int = 50,
-    min_stopword_hits: int = 2,
-    flesch_min_x1000: int = 50_000,
+    min_words: int,
+    min_stopword_hits: int,
+    flesch_min_x1000: int,
     entropy_min: Optional[float] = None,
 ) -> DataFrame:
     """Module-private ONE-SCAN fusion of the document quality-screen
@@ -2101,7 +2107,8 @@ def _screen_flags(
 
     * ``__a`` = ``gopher_quality_flags(...).passes_gopher`` — built from
       the same :func:`_gopher_measure_exprs` / :func:`_gopher_flag_exprs`
-      the operator itself uses;
+      the operator itself uses, with the operator's own defaults for every
+      threshold the battery does not take;
     * ``__b`` = the ``a.join(flesch, id, "left")`` + ``coalesce(__b,
       False)`` semantics: ``flesch_x1000 >= flesch_min_x1000`` where the
       doc has at least one Flesch word, ``False`` where
@@ -2124,8 +2131,13 @@ def _screen_flags(
     if entropy_min is not None:
         cols.append(F.split(F.col(text_col), "").alias("__chars"))
     bound = df.select(*cols)
+    # the op's signature is the one source of every default the battery keeps
+    gopher = dict(gopher_quality_flags.__kwdefaults__)
     meas = _gopher_measure_exprs(
-        text_col, F.col("__toks"), stopwords=GOPHER_STOPWORDS, round_to=4
+        text_col,
+        F.col("__toks"),
+        stopwords=gopher.pop("stopwords"),
+        round_to=gopher.pop("round_to"),
     )
     fw, fs, fy = _flesch_count_exprs(text_col)
     sel = [
@@ -2140,15 +2152,8 @@ def _screen_flags(
             _char_entropy_expr(F.col("__chars"), round_to=6).alias("__ent")
         )
     m = bound.select(*sel)
-    fl = _gopher_flag_exprs(
-        min_words=min_words,
-        max_words=100_000,
-        min_mean_word_len=3.0,
-        max_mean_word_len=10.0,
-        max_symbol_word_ratio=0.1,
-        min_alpha_word_ratio=0.8,
-        min_stopword_hits=min_stopword_hits,
-    )
+    gopher.update(min_words=min_words, min_stopword_hits=min_stopword_hits)
+    fl = _gopher_flag_exprs(**gopher)
     passes = (
         fl["ok_words"]
         & fl["ok_mean_word_len"]
@@ -2156,11 +2161,7 @@ def _screen_flags(
         & fl["ok_alpha_ratio"]
         & fl["ok_stopwords"]
     )
-    wd = F.col("__fw").cast("double")
-    sd = F.col("__fs").cast("double")
-    yd = F.col("__fy").cast("double")
-    score = F.lit(206.835) - F.lit(1.015) * (wd / sd) - F.lit(84.6) * (yd / wd)
-    fx1000 = F.floor(score * F.lit(1000.0)).cast("bigint")
+    fx1000 = _flesch_x1000_expr(F.col("__fw"), F.col("__fs"), F.col("__fy"))
     out = [
         F.col(id_col),
         passes.alias("__a"),

@@ -1,4 +1,4 @@
-from .readers import read_source_csv, read_source_jsonl, read_tables, TABLE_NAMES
+from .readers import read_source_csv, read_source_jsonl, TABLE_NAMES
 from .sinks import write_errors, write_valid
 from .archive import archive_file
 from .introspect import parquet_footer_audit
@@ -7,7 +7,6 @@ __all__ = [
     "parquet_footer_audit",
     "read_source_csv",
     "read_source_jsonl",
-    "read_tables",
     "TABLE_NAMES",
     "write_errors",
     "write_valid",

@@ -187,11 +187,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _fan_out_small_scan(spark, spark.read.parquet(path), name, path)
 
 
-def read_tables(spark: SparkSession, sf_dir: str, names: Sequence[str] = TABLE_NAMES) -> dict[str, DataFrame]:
-    """Load the driver's parquet tables for one scale factor."""
-    return {name: read_table(spark, sf_dir, name) for name in names}
-
-
 def read_jsonl(
     spark: SparkSession,
     path: str,

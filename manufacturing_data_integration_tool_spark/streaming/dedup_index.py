@@ -46,6 +46,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..ops._materialize import materialize_once, released
 from ..ops.dedup import minhash_band_tags, minhash_signatures
 
 __all__ = ["accumulate_minhash_index_stream"]
@@ -82,15 +83,16 @@ def accumulate_minhash_index_stream(
     sigs_dir = root / "sigs"
     tags_dir = root / "tags"
 
+    @released()  # each micro-batch frees the frames it materialized
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         new_sigs = minhash_signatures(
             batch, id_col, text_col, n=n, num_hashes=num_hashes,
             hash_family=hash_family,
-        ).localCheckpoint()
+        ).transform(materialize_once)
         new_tags = minhash_band_tags(
             new_sigs, num_hashes=num_hashes, bands=bands, hash_family=hash_family
-        ).localCheckpoint()
+        ).transform(materialize_once)
 
         nn = (
             new_tags.alias("a")

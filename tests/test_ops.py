@@ -2034,17 +2034,16 @@ def test_bm25_topk_multi_rejects_duplicate_qids(spark):
         bm25_topk_multi(df, [("q1", ["a"]), ("q1", ["b"])])
 
 
-def test_materialize_once_modes(spark):
-    """r13 fault-tolerance lever (r12 verdict item 3 / ADVICE): the
-    non-iterative multi-reference materializations route through
-    ops._materialize.materialize_once, whose strategy is a session conf —
-    localCheckpoint under a local master (default), lineage-preserving
-    MEMORY_AND_DISK persist when spark.mdi.materialize.mode=persist. Both
-    strategies must yield identical operator results."""
-    from manufacturing_data_integration_tool_spark.ops._materialize import (
-        MODE_CONF,
-        materialize_once,
-    )
+@pytest.mark.parametrize("strategy", ["checkpoint", "persist", "off"])
+def test_materialize_once_modes(spark, monkeypatch, strategy):
+    """ops._materialize picks localCheckpoint under a local master,
+    MEMORY_AND_DISK persist under any other (the master check is patched
+    here), and nothing under the audit-only ``off`` conf. Every strategy
+    returns the same ngram_jaccard_pairs rows, and a released() scope
+    leaves no persistent RDD beyond those registered at its entry."""
+    from pyspark import StorageLevel
+
+    from manufacturing_data_integration_tool_spark.ops import _materialize
     from manufacturing_data_integration_tool_spark.ops.dedup import (
         ngram_jaccard_pairs,
     )
@@ -2059,32 +2058,30 @@ def test_materialize_once_modes(spark):
         "doc_id long, text string",
     )
 
-    def run():
-        return sorted(
-            (r["doc_a"], r["doc_b"])
-            for r in ngram_jaccard_pairs(
-                docs, "doc_id", "text", n=3, threshold=0.2
-            ).collect()
-        )
+    def persistent_rdds():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
-    base = run()
-    assert base  # the fixture must produce at least one near-dup pair
-
-    # persist mode: same rows, and the handle is a lineage-preserving persist
-    spark.conf.set(MODE_CONF, "persist")
+    if strategy == "persist":
+        monkeypatch.setattr(_materialize, "_on_local_master", lambda df: False)
+    if strategy == "off":
+        spark.conf.set(_materialize.MODE_CONF, "off")
+    before = persistent_rdds()
     try:
-        assert run() == base
-        handle = materialize_once(docs)
-        assert handle.storageLevel.useDisk  # MEMORY_AND_DISK, not checkpoint
-        handle.unpersist()
+        with _materialize.released():
+            got = sorted(
+                (r["doc_a"], r["doc_b"])
+                for r in ngram_jaccard_pairs(
+                    docs, "doc_id", "text", n=3, threshold=0.2
+                ).collect()
+            )
+            level = _materialize.materialize_once(docs).storageLevel
+            made = persistent_rdds() - before
     finally:
-        spark.conf.unset(MODE_CONF)
-        spark.catalog.clearCache()
-
-    # default (auto, local master) stays the r12 checkpoint behavior
-    assert "local" in spark.conf.get("spark.master")
-    h2 = materialize_once(docs)
-    assert not h2.storageLevel.useDisk  # not persisted; checkpoint path
+        spark.conf.unset(_materialize.MODE_CONF)
+    assert got == [(1, 2), (3, 4)]
+    assert bool(made) == (strategy != "off")
+    assert (level == StorageLevel.MEMORY_AND_DISK) == (strategy == "persist")
+    assert not persistent_rdds() - before
 
 
 def test_langid_pred_expr_matches_op(spark):

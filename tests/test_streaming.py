@@ -656,6 +656,7 @@ def test_streaming_minhash_index_matches_batch_candidates(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
+    rdds_before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
     q = accumulate_minhash_index_stream(
         stream,
         str(tmp_path / "lsh_index"),
@@ -666,6 +667,8 @@ def test_streaming_minhash_index_matches_batch_candidates(spark, tmp_path):
     q.awaitTermination(180)
     if q.isActive:
         q.stop()
+    # each micro-batch released the signatures and band tags it materialized
+    assert not set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) - rdds_before
     got = {
         (r["doc_a"], r["doc_b"]): round(r["jaccard_dist"], 6)
         for r in spark.read.parquet(str(tmp_path / "lsh_pairs")).collect()

@@ -124,7 +124,9 @@ def sweep(
         # The audit-only 'off' mode disables every materialize_once /
         # checkpoint_round truncation so the fingerprint covers the full
         # pre-checkpoint lineage. Never used outside audits.
-        spark.conf.set("spark.mdi.materialize.mode", "off")
+        from manufacturing_data_integration_tool_spark.ops._materialize import MODE_CONF
+
+        spark.conf.set(MODE_CONF, "off")
     drift = []
     for name, fn in entrymod.queries().items():
         fps = {}
